@@ -30,7 +30,8 @@ PER_LAYER = {
     "aggregate.s": ("s", "lower"), "aggregate.base_s": ("s", "lower"),
     "aggregate.host_s": ("s", "lower"), "aggregate.shuffle_mb": ("MB", "lower"),
     "pipeline.s": ("s", "lower"), "pipeline.bucket_s_max": ("s", "lower"),
-    "pipeline.overhead_s": ("s", "lower"), "pipeline.peak_rss_mb": ("MB", "lower"),
+    "pipeline.overhead_s": ("s", "lower"), "pipeline.first_pass_s": ("s", "lower"),
+    "pipeline.peak_rss_mb": ("MB", "lower"),
     **{f"{layer}.gc_s": ("s", "lower") for layer in LAYERS},
     **{f"{layer}.spill_mb": ("MB", "lower") for layer in LAYERS},
     "trace.coverage": ("ratio", "higher"), "trace.overhead_s": ("s", "lower"),
@@ -41,7 +42,8 @@ MS = 1e3
 
 
 def layer_metrics(tracer: Tracer, values: dict, groups: dict[str, GroupStats],
-                  app_py: dict, untraced_median: float, peak_rss_mb: float) -> dict:
+                  app_py: dict, first_pass_s: float, untraced_s: float,
+                  peak_rss_mb: float) -> dict:
     """Every PER_LAYER metric from the spans of `tracer`, the values the
     traced chain measured and the event log's per-job-group stats."""
     span, v = tracer.seconds, values
@@ -79,6 +81,7 @@ def layer_metrics(tracer: Tracer, values: dict, groups: dict[str, GroupStats],
         "aggregate.shuffle_mb": g("aggregate").shuffle_write_bytes / MB,
         "pipeline.s": span("pipeline"),
         "pipeline.bucket_s_max": v["bucket_s_max"],
+        "pipeline.first_pass_s": first_pass_s,
         "pipeline.peak_rss_mb": peak_rss_mb,
     }
     # what run_pipeline runs, layer by layer (it counts no hosts)
@@ -90,5 +93,5 @@ def layer_metrics(tracer: Tracer, values: dict, groups: dict[str, GroupStats],
         out[f"{layer}.gc_s"] = g(layer).gc_ms / 1000
         out[f"{layer}.spill_mb"] = g(layer).spill_bytes / MB
     out["trace.coverage"] = layered / span("pipeline")
-    out["trace.overhead_s"] = span("pipeline") - untraced_median
+    out["trace.overhead_s"] = span("pipeline") - untraced_s
     return {k: {"value": float(out[k]), "unit": unit} for k, (unit, _) in PER_LAYER.items()}

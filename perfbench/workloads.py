@@ -22,6 +22,7 @@ from pysyslog.pipeline import run_pipeline, transform
 from pysyslog.route import route_by_facility_severity
 from pysyslog.tokens import detokenize, retokenize
 
+import procs
 from check import check_layered, check_pipeline
 from corpus import make_corpus
 
@@ -37,6 +38,10 @@ class PassResult:
     fails: list[str]
     sink_bytes: int
     check_s: float = 0.0
+    # CPU time of the process tree and steal time of the machine during
+    # the pass
+    cpu_s: float = 0.0
+    steal_s: float = 0.0
 
 
 @dataclass
@@ -98,6 +103,7 @@ class Pipeline:
 
     def run_pass(self, k) -> PassResult:
         out = self._out(k)
+        cpu, steal = procs.cpu_s(), procs.steal_s()
         t = time.perf_counter()
         try:
             manifest = run_pipeline(self.spark, self.tokens, out, OPTS,
@@ -106,7 +112,10 @@ class Pipeline:
             return PassResult(time.perf_counter() - t,
                               [f"run_pipeline raised: {traceback.format_exc(limit=1)}"], 0)
         dt = time.perf_counter() - t
-        return self._finish(out, manifest, dt)
+        cpu, steal = procs.cpu_s() - cpu, procs.steal_s() - steal
+        result = self._finish(out, manifest, dt)
+        result.cpu_s, result.steal_s = cpu, steal
+        return result
 
     def _finish(self, out: str, manifest: dict, dt: float) -> PassResult:
         t = time.perf_counter()
