@@ -92,6 +92,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pysyslog.pipeline import make_spark  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SF = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else 0.1
@@ -285,41 +287,6 @@ def settle_until_fresh(anchor: float | None, cap_sec: float,
         best = max(best, p)
     return {"waited_sec": round(waited, 1), "probe": p,
             "readings": readings}
-
-
-def make_spark(cpus: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"pysyslog-bench-{cpus}")
-        # 4 waves of tasks per core: enough granularity that one slow
-        # task (skewed sink, GC pause) doesn't gate the whole stage —
-        # and the count GROWS with the cluster, as it must at scale
-        .config("spark.sql.shuffle.partitions", str(max(cpus * 4, 8)))
-        # commit renames inside tasks (v2), not serially on the driver:
-        # the partitioned route write produces O(sinks × salt) files and
-        # a driver-side O(files) commit flattens scaling
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        # small corpus files must still fan out across all cores at the
-        # SCAN, so parallelism comes from the read instead of a
-        # full-corpus repartition shuffle
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config("spark.sql.adaptive.enabled", "true")
-        # let AQE coalesce the OUTPUT partitioning of cached plans too
-        # (off by default): pipeline_counts persists a ~sinks×hours-row
-        # aggregate that otherwise keeps all shuffle.partitions
-        # partitions, so every downstream agg over the tiny cache
-        # schedules cpus*4 near-empty tasks twice — measured 3.9s →
-        # 0.65s for the sink-totals rollup at bench scale
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-                "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
 
 
 def pipeline_run(spark, n_rows: int, out_dir: str, warmup: bool = True,

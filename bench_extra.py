@@ -2,14 +2,13 @@
 
 NOT part of the driver contract — bench.py is the frozen measured
 artifact; this file exists so optimization work can (a) time each
-declared query in isolation with the noop sink, (b) time the headline
-pipeline stage by stage, (c) dump .explain("formatted") plans to
-plans/<tag>/, and (d) report partition counts, without touching
-bench.py.
+declared query in isolation with the noop sink, (b) dump
+.explain("formatted") plans to plans/<tag>/, and (c) report partition
+counts, without touching bench.py.  The pipeline's stage-by-stage
+timing is `perfbench/run.py --trace 1`.
 
 Usage:
   python bench_extra.py queries  [--reps 3] [--names a,b,c] [--plans plans/r07 --suffix _before]
-  python bench_extra.py headline [--passes 2]
   python bench_extra.py parts    # partition counts of key scans
 """
 
@@ -25,20 +24,16 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pysyslog.pipeline import make_spark  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 BENCH_NAMES = [
     "parse_pri", "agg_hourly", "tpch_pricing_summary", "tpch_nation_orders",
     "dedup_exact", "minhash_signatures", "quality_score", "ann_cosine_topk",
     "multiline_reassembly",
 ]
-
-
-def make_spark():
-    import bench
-
-    return bench.make_spark(CPUS)
 
 
 def _noop(df):
@@ -57,7 +52,7 @@ def dump_plan(df, path: str):
 def cmd_queries(args):
     import __spark_entry__ as entry
 
-    spark = make_spark()
+    spark = make_spark(CPUS)
     q = entry.queries()
     names = args.names.split(",") if args.names else BENCH_NAMES
     # one warmup round first (JIT, python workers), then timed reps
@@ -79,80 +74,11 @@ def cmd_queries(args):
     spark.stop()
 
 
-def cmd_headline(args):
-    import tempfile
-
-    from pysyslog.aggregate import pipeline_counts, salted_counts
-    from pysyslog.gen import GEN_NOW_EPOCH, gen_tokens_df, rows_for_sf
-    from pysyslog.options import ParserOptions
-    from pysyslog.pipeline import transform
-    from pysyslog.route import route_by_facility_severity
-
-    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else 0.1
-    n_rows = rows_for_sf(sf)
-    opts = ParserOptions(now_epoch=GEN_NOW_EPOCH, auto_detect_json=True,
-                         auto_detect_key_values=True)
-    spark = make_spark()
-    cpus = spark.sparkContext.defaultParallelism
-    tmp = tempfile.mkdtemp(prefix="pysyslog-bx-", dir="/dev/shm")
-    try:
-        corpus = os.path.join(tmp, "corpus")
-        gen_tokens_df(spark, n_rows, partitions=cpus * 2).write.mode(
-            "overwrite").parquet(corpus)
-        tokens = spark.read.parquet(corpus)
-        # warmup (same shape as bench.pipeline_run)
-        w = transform(tokens.limit(max(n_rows // 20, 2000)).repartition(cpus),
-                      opts).drop("tokens", "message_raw").persist()
-        w.count()
-        route_by_facility_severity(w, os.path.join(tmp, "warmup"),
-                                   rows_hint=n_rows)
-        from pysyslog.aggregate import hourly_facility_severity_counts
-        hourly_facility_severity_counts(w).count()
-        salted_counts(w, "host").count()
-        w.unpersist()
-
-        for p in range(args.passes):
-            t0 = time.time()
-            enriched = transform(tokens, opts).drop("tokens", "message_raw").persist()
-            spark.sparkContext.setJobDescription(f"pass{p} parse+enrich count")
-            n = enriched.count()
-            t_parse = time.time() - t0
-            t1 = time.time()
-            spark.sparkContext.setJobDescription(f"pass{p} route")
-            route_by_facility_severity(enriched, os.path.join(tmp, f"out{p}"),
-                                       rows_hint=n)
-            t_route = time.time() - t1
-            t2 = time.time()
-            spark.sparkContext.setJobDescription(f"pass{p} agg")
-            base, hourly, sinks = pipeline_counts(enriched)
-            base = base.persist()
-            hourly.count()
-            sinks.count()
-            salted_counts(enriched, "host").count()
-            base.unpersist()
-            t_agg = time.time() - t2
-            enriched.unpersist()
-            total = time.time() - t0
-            print(json.dumps({
-                "pass": p, "rows": n,
-                "parse_enrich_sec": round(t_parse, 3),
-                "route_sec": round(t_route, 3),
-                "agg_sec": round(t_agg, 3),
-                "total_sec": round(total, 3),
-                "lines_per_sec": round(n / total, 1),
-            }), flush=True)
-    finally:
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-    spark.stop()
-
-
 def cmd_parts(args):
     import __spark_entry__ as entry
     from pyspark.sql import functions as F
 
-    spark = make_spark()
+    spark = make_spark(CPUS)
     for t in ("events", "documents", "embeddings", "lineitem", "orders"):
         p = os.path.join(SF_DIR, f"{t}.parquet")
         if os.path.exists(p):
@@ -163,15 +89,13 @@ def cmd_parts(args):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("cmd", choices=["queries", "headline", "parts"])
+    ap.add_argument("cmd", choices=["queries", "parts"])
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--names", default=None)
     ap.add_argument("--plans", default=None)
     ap.add_argument("--suffix", default="_before")
     args = ap.parse_args()
-    {"queries": cmd_queries, "headline": cmd_headline, "parts": cmd_parts}[
-        args.cmd](args)
+    {"queries": cmd_queries, "parts": cmd_parts}[args.cmd](args)
 
 
 if __name__ == "__main__":

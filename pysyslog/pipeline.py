@@ -53,6 +53,63 @@ def save_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(tmp, _manifest_path(out_dir))
 
 
+def make_spark(cpus: int | None = None) -> SparkSession:
+    """The session the pipeline and its benchmarks run in.  With `cpus`
+    it runs local[cpus] with a shuffle width that grows with the
+    cores; without, the master and shuffle width are spark-submit's."""
+    builder = SparkSession.builder.appName("pysyslog-pipeline")
+    if cpus:
+        builder = (
+            builder.master(f"local[{cpus}]")
+            # 4 waves of tasks per core: enough granularity that one slow
+            # task (skewed sink, GC pause) doesn't gate the whole stage —
+            # and the count GROWS with the cluster, as it must at scale
+            .config("spark.sql.shuffle.partitions", str(max(cpus * 4, 8)))
+        )
+    return (
+        builder
+        # commit renames inside tasks (v2), not serially on the driver:
+        # the partitioned route write produces O(sinks × salt) files and
+        # a driver-side O(files) commit flattens scaling
+        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+        # small corpus files must still fan out across all cores at the
+        # SCAN, so parallelism comes from the read instead of a
+        # full-corpus repartition shuffle
+        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
+        .config("spark.sql.adaptive.enabled", "true")
+        # let AQE coalesce the OUTPUT partitioning of cached plans too
+        # (off by default): pipeline_counts persists a ~sinks×hours-row
+        # aggregate that otherwise keeps all shuffle.partitions
+        # partitions, so every downstream agg over the tiny cache
+        # schedules cpus*4 near-empty tasks twice — measured 3.9s →
+        # 0.65s for the sink-totals rollup at bench scale
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
+        # run_pipeline persists the enriched frame.  Columnar-cache
+        # compression is a bad trade for it: the wide columns are
+        # near-unique strings (raw, message, content, sdata_json,
+        # rendered datetimes) that barely compress — measured 372 MB
+        # compressed vs 454 MB raw at bench scale (1.22x) while the
+        # encode/decode cost 30-50% of the cache-build wall (2.2s -> 3.2s
+        # steady-state build+count) plus decode on every downstream
+        # scan.  That ratio is a property of the enriched schema, not of
+        # the scale factor.
+        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+        # First-level vectorized aggregate hash map (off by default in
+        # Spark): every aggregate of the enriched frame (hourly/sink
+        # counts, salted host counts) measured a consistent 5-10% faster
+        # with it across interleaved A/B reps (hourly 2.30->2.14s,
+        # salted 1.89->1.55s, 600k rows).  It only changes the in-task
+        # partial-agg data structure, not the plan.
+        .config("spark.sql.codegen.aggregate.map.vectorized.enable", "true")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.driver.memory", "16g")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+
+
 def transform(tokens_df: DataFrame, options: ParserOptions,
               parse_partitions: int | None = None,
               emit_parsed_json: bool = False) -> DataFrame:
@@ -61,31 +118,6 @@ def transform(tokens_df: DataFrame, options: ParserOptions,
     Pure — no writes."""
     from .parser import parse_syslog_tokens
 
-    # Callers persist the frame this returns (bench stage 1, run_pipeline
-    # per bucket).  Columnar-cache compression is a bad trade for it:
-    # the wide columns are near-unique strings (raw, message, content,
-    # sdata_json, rendered datetimes) that barely compress — measured
-    # 372 MB compressed vs 454 MB raw at bench scale (1.22x) while the
-    # encode/decode cost 30-50% of the cache-build wall (2.2s -> 3.2s
-    # steady-state build+count) plus decode on every downstream scan
-    # (guide §2.3: for high-entropy payloads compression is pure
-    # overhead — measure both; we did).  That ratio is a property of
-    # the enriched schema, not of the scale factor, so the default
-    # holds at 10^12 rows; override via PSL_CACHE_COMPRESS=true where
-    # cache memory is the binding constraint.
-    tokens_df.sparkSession.conf.set(
-        "spark.sql.inMemoryColumnarStorage.compressed",
-        os.environ.get("PSL_CACHE_COMPRESS", "false"))
-    # First-level vectorized aggregate hash map (off by default in
-    # Spark): every downstream aggregate of the enriched frame
-    # (hourly/sink counts, salted host/program counts) measured a
-    # consistent 5-10% faster with it across interleaved A/B reps
-    # (hourly 2.30->2.14s, salted 1.89->1.55s, 600k rows).  Scale-safe:
-    # it only changes the in-task partial-agg data structure, not the
-    # plan; override via PSL_AGG_VECTORIZED_MAP=false.
-    tokens_df.sparkSession.conf.set(
-        "spark.sql.codegen.aggregate.map.vectorized.enable",
-        os.environ.get("PSL_AGG_VECTORIZED_MAP", "true"))
     df = tokens_df
     if parse_partitions:
         df = df.repartition(parse_partitions)
@@ -125,16 +157,20 @@ def run_pipeline(
         # tokens/message_raw are dead weight downstream (raw carries the
         # line for routed-row checks); dropping them halves cache bytes
         enriched = enriched.drop("tokens", "message_raw").persist()
-        m["rows_in"] = enriched.count()
-        m["parse_no_ts"] = enriched.filter(F.col("ts").isNull()).count()
-        route_by_facility_severity(
-            enriched, os.path.join(out_dir, f"bucket={b}"), mode="overwrite",
-            rows_hint=m["rows_in"],
-        )
-        # one shuffled aggregate feeds BOTH the hourly table and the
-        # per-sink totals (pipeline_counts) instead of two input scans
+        # one shuffled aggregate feeds the hourly table, the per-sink
+        # totals, the manifest's row counts and the route's salt widths,
+        # so the wide cache is scanned only here and by the route write
         base, hourly, sinks = pipeline_counts(enriched)
         base = base.persist()
+        sink_rows = sinks.collect()  # ≤ facilities × severities rows
+        m["rows_in"] = sum(r["n"] for r in sink_rows)
+        # ts is null exactly where the hour bucket is
+        m["parse_no_ts"] = base.filter(F.col("hour").isNull()).agg(
+            F.sum("n")).first()[0] or 0
+        route_by_facility_severity(
+            enriched, os.path.join(out_dir, f"bucket={b}"), mode="overwrite",
+            sink_counts=sink_rows,
+        )
         hourly.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"bucket={b}", "agg_hourly")
         )
@@ -166,21 +202,10 @@ def main(argv=None):
     ap.add_argument("--buckets", type=int, default=4)
     ap.add_argument("--now", type=float, default=None)
     ap.add_argument("--cpus", type=int, default=None,
-                    help="local[] threads (default: existing session / local[*])")
+                    help="local[] threads (default: spark-submit's master)")
     args = ap.parse_args(argv)
 
-    builder = (
-        SparkSession.builder.appName("pysyslog-pipeline")
-        # the persisted pipeline_counts base is tiny (≤ sinks × hours
-        # rows); without this AQE leaves it at shuffle.partitions
-        # partitions and every derived view pays a near-empty task
-        # storm (see bench.make_spark)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-                "true")
-    )
-    if args.cpus:
-        builder = builder.master(f"local[{args.cpus}]")
-    spark = builder.getOrCreate()
+    spark = make_spark(args.cpus)
     from .gen import GEN_NOW_EPOCH, gen_tokens_df, rows_for_sf
 
     if args.input:

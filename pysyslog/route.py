@@ -7,10 +7,6 @@ jobs: a single scan feeds every sink and the writer splits files by
 partition value.  In this sandbox the sink format is parquet; on a real
 cluster the same DataFrame goes to `.writeTo(table)` (Iceberg) with
 identity partition transforms — the plan shape is unchanged.
-
-Per-program sinks use the same mechanism keyed by program_name, with a
-cardinality cap (unknown/rare programs route to '__other') so a hostile
-corpus cannot create unbounded partitions.
 """
 
 from __future__ import annotations
@@ -21,6 +17,9 @@ from pyspark.sql import DataFrame, functions as F
 
 
 ROUTE_COLS = ["facility_name", "severity_name"]
+# the sink name a null facility or severity name routes to (enrich
+# leaves facility_name null for an out-of-range PRI such as <200>)
+UNKNOWN = "__unknown"
 
 # Parquet dictionary encoding is disabled per-column for the
 # high-cardinality text/identity fields of the enriched schema: the
@@ -49,40 +48,40 @@ def route_by_facility_severity(
     out_dir: str,
     mode: str = "overwrite",
     max_records_per_file: int = 1_000_000,
-    files_per_sink: int | None = None,
+    sink_counts: list | None = None,
     rows_hint: int | None = None,
     iceberg_table: str | None = None,
 ) -> str:
     """Repartitions on (sink keys, bounded salt) before the partitioned
     write: without it every write task opens a parquet writer for every
     sink it sees (tasks × sinks tiny files — measured 4x slower at
-    bench scale); with it each sink is written by ≤ files_per_sink
-    tasks, and the salt keeps one hot sink from serializing into a
+    bench scale); with it each sink is written by as many tasks as its
+    salt width, and the salt keeps one hot sink from serializing into a
     single task.
 
     The salt granularity is sized to the DATA, per sink (optimization
-    guide §2.5 hot keys / §6 small files).  With `rows_hint` (every
-    pipeline caller), sink sizes are measured with one cheap partial-agg
-    count over the input — ≤ sinks rows collected, callers have already
-    persisted the frame — and each sink gets its own salt width:
-    ceil(sink rows / target) for sinks above 2×target, width 1
+    guide §2.5 hot keys / §6 small files).  Each sink gets its own salt
+    width: ceil(sink rows / target) for sinks above 2×target, width 1
     otherwise, where target = min(max_records_per_file,
     total // (2 × parallelism)).  A hot sink (the PRI-less user/notice
     default is 22% of the generated corpus) thus spreads across ~2×
     parallelism write tasks instead of serializing into one straggler
     task, while small sinks keep width 1 — one right-sized file each —
-    at EVERY scale.  A uniform data-sized salt (the previous design,
-    ceil(rows_hint / 2×max_records_per_file) for all sinks) is wrong at
-    both ends: at small volume a constant oversized salt shatters every
-    sink into sub-file-size pieces (measured: salt 4 at 1.2M rows → 636
-    files of ~1900 rows, 1.6x slower than 191 right-sized files), and
-    at 10^12 rows a global width of ~250k sprays each TINY sink across
-    every write task — O(sinks × tasks) tiny files.  Per-sink widths
-    are the only shape that is simultaneously straggler-free and
-    shatter-free; the counting pass measured 0.7-0.8s at 600k rows and
-    the A/B (interleaved, 4 reps) read write-incl-count 2.77-2.98s vs
-    uniform 2.91-3.22s.  Explicit `files_per_sink` overrides with a
-    uniform salt (legacy behavior; `None` with no hint keeps 4).
+    at EVERY scale.  A uniform salt is wrong at both ends: at small
+    volume a constant oversized salt shatters every sink into
+    sub-file-size pieces (measured: salt 4 at 1.2M rows → 636 files of
+    ~1900 rows, 1.6x slower than 191 right-sized files), and at 10^12
+    rows a global width of ~250k sprays each TINY sink across every
+    write task — O(sinks × tasks) tiny files.
+
+    `sink_counts` are the rows per sink: rows with facility_name,
+    severity_name and n, such as `aggregate.pipeline_counts`' sinks
+    view collected (run_pipeline passes it).  Null names count toward
+    the __unknown sink they route to.  Without them the route counts
+    the sinks itself with one partial-agg job over `enriched` — cheap
+    when the caller has persisted it.  `rows_hint` is accepted and
+    ignored, because existing callers still pass it: the counts carry
+    the total.
 
     With an Iceberg runtime on the classpath and `iceberg_table` given,
     the identical DataFrame goes through `writeTo(...)` with identity
@@ -91,29 +90,29 @@ def route_by_facility_severity(
     from .iceberg import write_partitioned
 
     base = (
-        enriched.withColumn("facility_name", F.coalesce("facility_name", F.lit("__unknown")))
-        .withColumn("severity_name", F.coalesce("severity_name", F.lit("__unknown")))
+        enriched.withColumn("facility_name", F.coalesce("facility_name", F.lit(UNKNOWN)))
+        .withColumn("severity_name", F.coalesce("severity_name", F.lit(UNKNOWN)))
     )
-    if files_per_sink is None and rows_hint is not None:
-        par = enriched.sparkSession.sparkContext.defaultParallelism
-        counts = base.groupBy("facility_name", "severity_name").count().collect()
-        total = sum(r["count"] for r in counts) or rows_hint
-        target = max(1, min(max_records_per_file, total // (2 * par)))
-        # at most total/(2*target) ≈ parallelism sinks can exceed
-        # 2*target, so this when-chain stays short at any scale
-        width = F.lit(1)
-        for r in counts:
-            if r["count"] > 2 * target:
-                width = F.when(
-                    (F.col("facility_name") == r["facility_name"])
-                    & (F.col("severity_name") == r["severity_name"]),
-                    F.lit(min(-(-r["count"] // target), 2 * par)),
-                ).otherwise(width)
-        salt = F.pmod(F.xxhash64("doc_id"), width)
-    else:
-        if files_per_sink is None:
-            files_per_sink = 4
-        salt = F.pmod(F.xxhash64("doc_id"), F.lit(files_per_sink))
+    if sink_counts is None:
+        sink_counts = base.groupBy(*ROUTE_COLS).agg(
+            F.count(F.lit(1)).alias("n")).collect()
+    counts: dict[tuple[str, str], int] = {}
+    for r in sink_counts:
+        k = (r["facility_name"] or UNKNOWN, r["severity_name"] or UNKNOWN)
+        counts[k] = counts.get(k, 0) + r["n"]
+
+    par = enriched.sparkSession.sparkContext.defaultParallelism
+    target = max(1, min(max_records_per_file, sum(counts.values()) // (2 * par)))
+    # at most total/(2*target) ≈ parallelism sinks can exceed
+    # 2*target, so this when-chain stays short at any scale
+    width = F.lit(1)
+    for (fac, sev), n in counts.items():
+        if n > 2 * target:
+            width = F.when(
+                (F.col("facility_name") == fac) & (F.col("severity_name") == sev),
+                F.lit(min(-(-n // target), 2 * par)),
+            ).otherwise(width)
+    salt = F.pmod(F.xxhash64("doc_id"), width)
 
     path = os.path.join(out_dir, "by_facility_severity")
     routed = base.repartition(
@@ -123,33 +122,3 @@ def route_by_facility_severity(
         max_records_per_file=max_records_per_file,
         writer_options=NO_DICT_WRITER_OPTIONS,
     )
-
-
-def route_by_program(
-    enriched: DataFrame,
-    out_dir: str,
-    top_programs: int = 64,
-    mode: str = "overwrite",
-) -> str:
-    """Per-program sinks, capped to the top-N programs by volume (the
-    long tail routes to '__other').  The top-N set is computed with a
-    salted count so a hot program doesn't skew the ranking shuffle."""
-    from .aggregate import salted_counts
-
-    path = os.path.join(out_dir, "by_program")
-    top = [
-        r["program_name"]
-        for r in salted_counts(enriched.filter(F.col("program_name").isNotNull()),
-                               "program_name")
-        .orderBy(F.desc("n"), "program_name")
-        .limit(top_programs)
-        .collect()
-    ]
-    routed = enriched.withColumn(
-        "program_sink",
-        F.when(F.col("program_name").isin(top), F.col("program_name")).otherwise(
-            F.lit("__other")
-        ),
-    )
-    routed.write.mode(mode).partitionBy("program_sink").parquet(path)
-    return path

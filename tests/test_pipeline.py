@@ -19,6 +19,7 @@ from pysyslog.aggregate import (
 from pysyslog.gen import GEN_NOW_EPOCH, gen_tokens_df, synth_lines
 from pysyslog.pipeline import load_manifest, run_pipeline, transform
 from pysyslog.tables import FACILITY_NAMES, PRIORITY_NAMES
+from pysyslog.tokens import retokenize
 
 import numpy as np
 
@@ -186,6 +187,49 @@ def test_routed_row_equality_and_resume(spark, corpus, tmp_path):
     m2 = run_pipeline(spark, corpus.limit(0), out, OPTS, n_buckets=2)
     assert m2["buckets"] == manifest["buckets"]
     assert load_manifest(out)["metrics"]["total_rows"] == N
+
+
+def test_transform_sets_no_session_conf(spark):
+    """transform is a pure plan builder: session confs are the session
+    builder's job, so a fresh session's confs are untouched by it."""
+    s = spark.newSession()
+    before = s.conf.getAll
+    transform(gen_tokens_df(s, 10, partitions=1), OPTS)
+    assert s.conf.getAll == before
+
+
+def test_manifest_counts_on_odd_lines(spark, corpus, tmp_path):
+    """rows_in and parse_no_ts come from the one pipeline_counts
+    aggregate; check them against direct counts on lines that reach a
+    null ts (no date) and a null facility name (PRI 200 is out of
+    range), which must route to the __unknown sink."""
+    from pyspark.sql import functions as F
+
+    odd_lines = ["<13>no date here at all", "<200>May 19 22:03:29 h p: x"] * 3
+    odd = retokenize(
+        spark.createDataFrame(
+            [(f"odd-{i:012d}", line, "odd") for i, line in enumerate(odd_lines)],
+            "doc_id string, raw string, source string"),
+        raw_col="raw", out_col="tokens",
+    ).select("doc_id", "tokens", F.size("tokens").alias("n_tok"), "source")
+    tokens = corpus.unionByName(odd)
+    out = str(tmp_path / "odd")
+    m = run_pipeline(spark, tokens, out, OPTS, n_buckets=1)["buckets"]["0"]
+
+    direct = transform(tokens, OPTS)
+    assert m["rows_in"] == direct.count() == N + len(odd_lines)
+    assert m["parse_no_ts"] == direct.filter(F.col("ts").isNull()).count() > 0
+
+    routed = spark.read.parquet(out + "/bucket=0/by_facility_severity")
+    unknown = {
+        r["doc_id"]
+        for r in routed.filter(F.col("facility_name") == "__unknown").collect()
+    }
+    assert unknown == {
+        f"odd-{i:012d}" for i, line in enumerate(odd_lines) if line.startswith("<200>")
+    }
+    sinks = spark.read.parquet(out + "/bucket=0/sink_counts")
+    assert sinks.agg(F.sum("n")).first()[0] == m["rows_in"]
 
 
 def test_iceberg_probe_and_parquet_fallback(spark, tmp_path):
