@@ -601,12 +601,7 @@ def config_matrix(n: int = 20000) -> dict[str, float]:
 
     from pysyslog.gen import GEN_NOW_EPOCH, synth_lines
     from pysyslog.options import ParserOptions
-    from pysyslog.parser import (
-        FIELD_NAMES,
-        _INT_FIELDS,
-        _fast_regex,
-        _parse_batch,
-    )
+    from pysyslog.parser import _fast_regex, _parse_batch
     from pysyslog.parser_core import SyslogParser
 
     base = ParserOptions(now_epoch=GEN_NOW_EPOCH)
@@ -623,16 +618,11 @@ def config_matrix(n: int = 20000) -> dict[str, float]:
     }
     lines, _ = synth_lines(np.arange(n))
     raw = pd.Series(lines, dtype=object)
-    plain = [
-        f for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
     out = {}
     for name, opts in presets.items():
         rx = _fast_regex(opts)
-        _parse_batch(SyslogParser(opts), raw[:2000], opts, FIELD_NAMES,
-                     plain, False, rx)  # JIT/import warmup
+        _parse_batch(SyslogParser(opts), raw[:2000], opts, False,
+                     rx)  # JIT/import warmup
         rates = []
         for _ in range(3):
             # FRESH parser per pass: a shared one would serve passes
@@ -640,7 +630,7 @@ def config_matrix(n: int = 20000) -> dict[str, float]:
             # cold-corpus rate
             p = SyslogParser(opts)
             t0 = time.time()
-            _parse_batch(p, raw, opts, FIELD_NAMES, plain, False, rx)
+            _parse_batch(p, raw, opts, False, rx)
             rates.append(n / (time.time() - t0))
         out[name] = round(statistics.median(rates), 1)
     return out
@@ -660,12 +650,7 @@ def date_cohort_matrix(n: int = 20000) -> dict[str, float]:
 
     from pysyslog.gen import GEN_NOW_EPOCH, synth_lines
     from pysyslog.options import ParserOptions
-    from pysyslog.parser import (
-        FIELD_NAMES,
-        _INT_FIELDS,
-        _fast_regex,
-        _parse_batch,
-    )
+    from pysyslog.parser import _fast_regex, _parse_batch
     from pysyslog.parser_core import SyslogParser
 
     opts = ParserOptions(now_epoch=GEN_NOW_EPOCH)
@@ -680,23 +665,17 @@ def date_cohort_matrix(n: int = 20000) -> dict[str, float]:
                    if s.startswith("bsd_")][:n],
         "mixed": lines[:n],
     }
-    plain = [
-        f for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
     rx = _fast_regex(opts)
     out = {}
     for name, cohort_lines in cohorts.items():
         m = len(cohort_lines)
         raw = pd.Series(cohort_lines, dtype=object)
-        _parse_batch(SyslogParser(opts), raw[:2000], opts, FIELD_NAMES,
-                     plain, False, rx)
+        _parse_batch(SyslogParser(opts), raw[:2000], opts, False, rx)
         rates = []
         for _ in range(3):
             p = SyslogParser(opts)
             t0 = time.time()
-            _parse_batch(p, raw, opts, FIELD_NAMES, plain, False, rx)
+            _parse_batch(p, raw, opts, False, rx)
             rates.append(m / (time.time() - t0))
         out[name] = round(statistics.median(rates), 1)
     return out

@@ -50,14 +50,14 @@ def host_dim(spark, n_hosts: int = 400) -> DataFrame:
     )
 
 
-def enrich(parsed: DataFrame, spark=None, with_host_dim: bool = True) -> DataFrame:
+def enrich(parsed: DataFrame) -> DataFrame:
     """Attach severity_name/facility_name from the dimension tables and
     host geo metadata.  Unparseable PRIs keep NULL names; rows without a
     PRI fall back to user/notice (the syslogd default, RFC 3164 §4.1.1)."""
-    spark = spark or parsed.sparkSession
+    spark = parsed.sparkSession
     sev = severity_dim(spark).withColumnRenamed("severity_int", "__sev_int")
     fac = facility_dim(spark).withColumnRenamed("facility_int", "__fac_int")
-    out = (
+    return (
         parsed.join(
             F.broadcast(sev),
             F.coalesce(parsed["priority_int"], F.lit(5)) == F.col("__sev_int"),
@@ -69,7 +69,5 @@ def enrich(parsed: DataFrame, spark=None, with_host_dim: bool = True) -> DataFra
             "left",
         )
         .drop("__sev_int", "__fac_int")
+        .join(F.broadcast(host_dim(spark)), on="host", how="left")
     )
-    if with_host_dim:
-        out = out.join(F.broadcast(host_dim(spark)), on="host", how="left")
-    return out

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .tokens import encode_line
+
 TEMPLATE_SOURCES = [
     "bsd_sshd",        # BSD date, program[pid]
     "bsd_cron",        # path program, no host domain
@@ -177,8 +179,7 @@ def gen_tokens_df(spark, n_rows: int, seed: int = 42, partitions: int | None = N
         for pdf in iterator:
             ids = pdf["id"].to_numpy()
             lines, sources = synth_lines(ids, seed)
-            toks = [np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype("int32")
-                    for s in lines]
+            toks = [encode_line(s) for s in lines]
             yield pdl.DataFrame(
                 {
                     "doc_id": [f"{src}-{i:012d}" for src, i in zip(sources, ids)],

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 from .goldens import canon, canonical_json
 from .options import ParserOptions
 from .parser_core import SyslogParser
+from .tokens import decode_batch
 
 _STR_FIELDS_1 = (
     "message_raw priority facility datetime_raw epoch datetime_utc "
@@ -62,6 +63,15 @@ SYSLOG_SCHEMA = StructType(
 
 FIELD_NAMES = [f.name for f in SYSLOG_SCHEMA.fields]
 _INT_FIELDS = {"preamble", "version", "priority_int", "facility_int"}
+# the fields _slow_cols fills with a plain dict get; the int fields and
+# the derived ones below get explicit slots.  Columns accumulate into
+# per-field lists (pd.DataFrame(dict-of-lists) avoids the row-tuple zip
+# the list-of-tuples constructor pays).
+_PLAIN_FIELDS = [
+    f for f in FIELD_NAMES
+    if f not in _INT_FIELDS
+    and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
+]
 
 
 def _flatten_sdata(sdata, prefix="", out=None):
@@ -629,12 +639,11 @@ def _derive_dt_columns(parser, ext, dt_list, yr_list):
     return (list(t) for t in zip(*tups))
 
 
-def _fast_cols(parser, raw_list, ext: pd.DataFrame, options,
-               field_names) -> dict:
+def _fast_cols(parser, raw_list, ext: pd.DataFrame, options) -> dict:
     """Column lists for fast-path rows.  Single-pass list assembly —
     no per-field pandas .map (each would cost a Python call per row)."""
     n = len(ext)
-    cols: dict[str, list] = {f: [None] * n for f in field_names}
+    cols: dict[str, list] = {f: [None] * n for f in FIELD_NAMES}
     dt_list = ext.col("dt")
     yr_list = ext.col("yr")
     if options.date_parsing:
@@ -826,11 +835,10 @@ def _fast_cols(parser, raw_list, ext: pd.DataFrame, options,
     return cols
 
 
-def _slow_cols(parser, raw_list, field_names, plain_fields,
-               emit_parsed_json) -> dict:
+def _slow_cols(parser, raw_list, emit_parsed_json) -> dict:
     parse = parser.parse
-    cols: dict[str, list] = {f: [] for f in field_names}
-    plain_appends = [(f, cols[f].append) for f in plain_fields]
+    cols: dict[str, list] = {f: [] for f in FIELD_NAMES}
+    plain_appends = [(f, cols[f].append) for f in _PLAIN_FIELDS]
     # the special fields are fixed; inline their common cases instead of
     # dispatching through _field_value (8 Python calls per row)
     int_appends = [(f, cols[f].append) for f in
@@ -861,7 +869,7 @@ def _slow_cols(parser, raw_list, field_names, plain_fields,
     return cols
 
 
-def _typed_frame(cols, index, field_names) -> pd.DataFrame:
+def _typed_frame(cols, index) -> pd.DataFrame:
     """Columns dict -> DataFrame without float coercion: pandas turns
     an int+None list into float64, which ROUNDS epoch_us above 2^53
     (post-2255 timestamps).  EVERY column is wrapped as an object
@@ -869,7 +877,7 @@ def _typed_frame(cols, index, field_names) -> pd.DataFrame:
     pre-built ndarrays skip pandas' per-column sanitize/platform-cast
     path entirely (measured ~0.7µs/row on a 36-column batch)."""
     data = {}
-    for f in field_names:
+    for f in FIELD_NAMES:
         v = cols[f]
         if isinstance(v, np.ndarray):
             data[f] = v
@@ -877,25 +885,20 @@ def _typed_frame(cols, index, field_names) -> pd.DataFrame:
             a = np.empty(len(v), dtype=object)
             a[:] = v
             data[f] = a
-    return pd.DataFrame(data, index=index, columns=field_names, copy=False)
+    return pd.DataFrame(data, index=index, columns=FIELD_NAMES, copy=False)
 
 
-def _slow_frame(parser, raw: pd.Series, field_names, plain_fields,
-                emit_parsed_json) -> pd.DataFrame:
-    cols = _slow_cols(parser, raw.tolist(), field_names, plain_fields,
-                      emit_parsed_json)
-    return _typed_frame(cols, raw.index, field_names)
+def _slow_frame(parser, raw: pd.Series, emit_parsed_json) -> pd.DataFrame:
+    return _typed_frame(_slow_cols(parser, raw.tolist(), emit_parsed_json),
+                        raw.index)
 
 
-def _parse_batch(parser, raw: pd.Series, options, field_names, plain_fields,
-                 emit_parsed_json, fast_re) -> pd.DataFrame:
+def _parse_batch(parser, raw: pd.Series, options, emit_parsed_json,
+                 fast_re) -> pd.DataFrame:
     """Split a batch into the vectorized clean-line cohort and the
     state-machine remainder; outputs are row-identical either way."""
-    import numpy as np
-
     if fast_re is None or emit_parsed_json or len(raw) == 0:
-        return _slow_frame(parser, raw, field_names, plain_fields,
-                           emit_parsed_json)
+        return _slow_frame(parser, raw, emit_parsed_json)
     raw_list = raw.tolist()
     rxm = fast_re.match
     tups = [
@@ -929,28 +932,25 @@ def _parse_batch(parser, raw: pd.Series, options, field_names, plain_fields,
     frac = mask.mean()
     if not mask.any() or frac < _FAST_MIN_FRAC:
         # cohort too thin to amortize the vectorized assembly
-        return _slow_frame(parser, raw, field_names, plain_fields,
-                           emit_parsed_json)
+        return _slow_frame(parser, raw, emit_parsed_json)
     idx = {name: num - 1 for name, num in gi.items()}
     if frac == 1.0:
-        cols = _fast_cols(parser, raw_list, _Groups(tups, idx), options,
-                          field_names)
-        return _typed_frame(cols, raw.index, field_names)
+        cols = _fast_cols(parser, raw_list, _Groups(tups, idx), options)
+        return _typed_frame(cols, raw.index)
     pos_fast = np.flatnonzero(mask)
     pos_slow = np.flatnonzero(~mask)
     fast = _fast_cols(parser, [raw_list[i] for i in pos_fast],
-                      _Groups([tups[i] for i in pos_fast], idx), options,
-                      field_names)
-    slow = _slow_cols(parser, [raw_list[i] for i in pos_slow], field_names,
-                      plain_fields, emit_parsed_json)
+                      _Groups([tups[i] for i in pos_fast], idx), options)
+    slow = _slow_cols(parser, [raw_list[i] for i in pos_slow],
+                      emit_parsed_json)
     out: dict = {}
     n = len(raw)
-    for f in field_names:
+    for f in FIELD_NAMES:
         arr = np.empty(n, dtype=object)
         arr[pos_fast] = fast[f]
         arr[pos_slow] = slow[f]
         out[f] = arr
-    return pd.DataFrame(out, index=raw.index, columns=field_names, copy=False)
+    return pd.DataFrame(out, index=raw.index, columns=FIELD_NAMES, copy=False)
 
 
 def _get_parser(options: ParserOptions) -> SyslogParser:
@@ -961,93 +961,68 @@ def _get_parser(options: ParserOptions) -> SyslogParser:
     return p
 
 
-def make_parse_udf(options: ParserOptions, emit_parsed_json: bool = False):
-    """Build the Arrow-batched parse UDF (options captured by closure;
-    must have a pinned now_epoch for deterministic retries)."""
-    from pyspark.sql.functions import pandas_udf
-
+def _batch_parser(options: ParserOptions, emit_parsed_json: bool):
+    """raw-line Series -> SYSLOG_SCHEMA frame: what both parse UDFs run
+    on a batch (options captured by closure; must have a pinned
+    now_epoch for deterministic retries)."""
     if options.now_epoch is None:
         raise ValueError(
             "options.now_epoch must be pinned before distributing the parser "
             "(wall-clock reads inside tasks break retry determinism)"
         )
-
-    # Hot-path field layout: the handful of special fields get explicit
-    # slots; everything else is a plain dict get.  Columns accumulate
-    # into per-field lists (pd.DataFrame(dict-of-lists) avoids the
-    # row-tuple zip the list-of-tuples constructor pays).
-    plain_fields = [
-        f
-        for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
     fast_re = None if emit_parsed_json else _fast_regex(options)
 
-    @pandas_udf(SYSLOG_SCHEMA)
-    def parse_udf(raw: pd.Series) -> pd.DataFrame:
-        parser = _get_parser(options)
-        return _parse_batch(parser, raw, options, FIELD_NAMES, plain_fields,
+    def parse_batch(raw: pd.Series) -> pd.DataFrame:
+        return _parse_batch(_get_parser(options), raw, options,
                             emit_parsed_json, fast_re)
 
-    return parse_udf
+    return parse_batch
 
 
-def make_parse_tokens_udf(options: ParserOptions, emit_parsed_json: bool = False):
+def make_parse_udf(options: ParserOptions, emit_parsed_json: bool = False):
+    """Build the Arrow-batched parse UDF: raw line -> parsed struct."""
+    from pyspark.sql.functions import pandas_udf
+
+    return pandas_udf(_batch_parser(options, emit_parsed_json), SYSLOG_SCHEMA)
+
+
+def make_parse_tokens_udf(options: ParserOptions):
     """Fused detokenize+parse UDF: tokens array<int32> -> parsed struct
     (with the raw line as message_raw/raw inside the struct).  One
     Python/Arrow boundary instead of two back-to-back ArrowEvalPython
     nodes — at 10^12 rows the second crossing is pure waste."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    if options.now_epoch is None:
-        raise ValueError("options.now_epoch must be pinned (see make_parse_udf)")
-
+    parse_batch = _batch_parser(options, False)
     schema = StructType(SYSLOG_SCHEMA.fields + [StructField("raw", StringType())])
-    plain_fields = [
-        f
-        for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
-    fast_re = None if emit_parsed_json else _fast_regex(options)
 
     @pandas_udf(schema)
     def parse_tokens_udf(tokens: pd.Series) -> pd.DataFrame:
-        parser = _get_parser(options)
-        raw = pd.Series(
-            [
-                None
-                if arr is None
-                else np.asarray(arr, dtype=np.uint8).tobytes().decode("utf-8", "strict")
-                for arr in tokens
-            ],
-            index=tokens.index,
-            dtype=object,
-        )
-        out = _parse_batch(parser, raw, options, FIELD_NAMES, plain_fields,
-                           emit_parsed_json, fast_re)
+        raw = decode_batch(tokens)
+        out = parse_batch(raw)
         out["raw"] = raw
         return out
 
     return parse_tokens_udf
 
 
+def _flatten(df: DataFrame, parsed: Column) -> DataFrame:
+    """df plus the parsed struct's fields as top-level columns and a
+    JVM-derived `ts` timestamp (from epoch_us; stays in whole-stage
+    codegen for all downstream windowing)."""
+    out = df.withColumn("syslog", parsed).select(*df.columns, "syslog.*")
+    return out.withColumn("ts", F.timestamp_micros(F.col("epoch_us")))
+
+
 def parse_syslog_tokens(
     df: DataFrame,
     tokens_col: str = "tokens",
     options: ParserOptions | None = None,
-    emit_parsed_json: bool = False,
-    struct_col: str = "syslog",
 ) -> DataFrame:
     """Fused scan-side operator: detokenize+parse in one Arrow crossing,
-    flattened, with the JVM-derived ts column (like parse_syslog)."""
-    options = options or ParserOptions()
-    udf = make_parse_tokens_udf(options, emit_parsed_json)
-    out = df.withColumn(struct_col, udf(F.col(tokens_col)))
-    out = out.select(*df.columns, f"{struct_col}.*")
-    return out.withColumn("ts", F.timestamp_micros(F.col("epoch_us")))
+    flattened like parse_syslog."""
+    udf = make_parse_tokens_udf(options or ParserOptions())
+    return _flatten(df, udf(F.col(tokens_col)))
 
 
 def parse_syslog(
@@ -1055,22 +1030,12 @@ def parse_syslog(
     raw_col: str | Column = "raw",
     options: ParserOptions | None = None,
     emit_parsed_json: bool = False,
-    flatten: bool = True,
-    struct_col: str = "syslog",
 ) -> DataFrame:
-    """parse operator: adds the parsed struct (or its flattened fields).
+    """parse operator: adds the parsed fields as top-level columns plus
+    a JVM-derived `ts` timestamp.
 
-    ⇔ parse_syslog_line applied column-wise (Line.pm:704-1014).  With
-    flatten=True, fields become top-level columns plus a JVM-derived
-    `ts` timestamp (from epoch_us; stays in whole-stage codegen for all
-    downstream windowing).
+    ⇔ parse_syslog_line applied column-wise (Line.pm:704-1014).
     """
-    options = options or ParserOptions()
-    udf = make_parse_udf(options, emit_parsed_json)
+    udf = make_parse_udf(options or ParserOptions(), emit_parsed_json)
     col = F.col(raw_col) if isinstance(raw_col, str) else raw_col
-    out = df.withColumn(struct_col, udf(col))
-    if flatten:
-        existing = [c for c in df.columns]
-        out = out.select(*existing, f"{struct_col}.*")
-        out = out.withColumn("ts", F.timestamp_micros(F.col("epoch_us")))
-    return out
+    return _flatten(df, udf(col))

@@ -28,9 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .aggregate import pipeline_counts
 from .enrich import enrich
 from .options import ParserOptions
-from .parser import parse_syslog
+from .parser import parse_syslog_tokens
 from .route import route_by_facility_severity
-from .tokens import detokenize, retokenize
+from .tokens import lossy
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -111,19 +111,14 @@ def make_spark(cpus: int | None = None) -> SparkSession:
 
 
 def transform(tokens_df: DataFrame, options: ParserOptions,
-              parse_partitions: int | None = None,
-              emit_parsed_json: bool = False) -> DataFrame:
+              parse_partitions: int | None = None) -> DataFrame:
     """The logical plan shared by batch pipeline, bench, and tests:
     (detokenize+parse fused into one Arrow crossing) → enrich.
     Pure — no writes."""
-    from .parser import parse_syslog_tokens
-
     df = tokens_df
     if parse_partitions:
         df = df.repartition(parse_partitions)
-    parsed = parse_syslog_tokens(df, "tokens", options,
-                                 emit_parsed_json=emit_parsed_json)
-    return enrich(parsed)
+    return enrich(parse_syslog_tokens(df, "tokens", options))
 
 
 def run_pipeline(
@@ -132,7 +127,6 @@ def run_pipeline(
     out_dir: str,
     options: ParserOptions,
     n_buckets: int = 4,
-    verify_roundtrip: bool = True,
 ) -> dict:
     """Bucketed, resumable batch run. Returns the manifest."""
     manifest = load_manifest(out_dir)
@@ -148,11 +142,10 @@ def run_pipeline(
         enriched = transform(part, options, parse_partitions=parallelism * 2)
 
         m: dict = {"bucket": b}
-        if verify_roundtrip:
-            rt = retokenize(detokenize(part), raw_col="raw", out_col="tokens_rt")
-            m["roundtrip_violations"] = rt.filter(
-                ~(F.col("tokens") == F.col("tokens_rt"))
-            ).count()
+        # a JVM-only scan of the token column: the parse UDF is the one
+        # place the bucket's tokens become lines (and where invalid
+        # UTF-8 fails the run)
+        m["roundtrip_violations"] = part.filter(lossy()).count()
 
         # tokens/message_raw are dead weight downstream (raw carries the
         # line for routed-row checks); dropping them halves cache bytes

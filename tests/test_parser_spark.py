@@ -93,7 +93,6 @@ def test_fast_path_equals_slow_on_mixed_corpus():
     from pysyslog.options import ParserOptions
     from pysyslog.parser import (
         FIELD_NAMES,
-        _INT_FIELDS,
         _fast_regex,
         _parse_batch,
         _slow_frame,
@@ -195,11 +194,6 @@ def test_fast_path_equals_slow_on_mixed_corpus():
         "Jun  1 12:00:00 /usr/bin/app[p q]: space pid path",
         None,
     ]
-    plain = [
-        f for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
     option_sets = [
         ParserOptions(now_epoch=GEN_NOW_EPOCH),
         ParserOptions(now_epoch=GEN_NOW_EPOCH, auto_detect_json=True,
@@ -222,10 +216,8 @@ def test_fast_path_equals_slow_on_mixed_corpus():
     for opts in option_sets:
         fast_re = _fast_regex(opts)
         assert fast_re is not None
-        got = _parse_batch(SyslogParser(opts), raw, opts, FIELD_NAMES,
-                           plain, False, fast_re)
-        want = _slow_frame(SyslogParser(opts), raw, FIELD_NAMES, plain,
-                           False)
+        got = _parse_batch(SyslogParser(opts), raw, opts, False, fast_re)
+        want = _slow_frame(SyslogParser(opts), raw, False)
         def _n(v):
             # None and NaN are both Arrow nulls; ints may ride as floats
             if v is None or (isinstance(v, float) and v != v):

@@ -232,6 +232,40 @@ def test_manifest_counts_on_odd_lines(spark, corpus, tmp_path):
     assert sinks.agg(F.sum("n")).first()[0] == m["rows_in"]
 
 
+def _token_rows(spark, rows):
+    """(doc_id, tokens) pairs -> rows of the token-table schema."""
+    return spark.createDataFrame(
+        [(d, t, len(t), "odd") for d, t in rows],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+
+
+def test_roundtrip_violations_counted(spark, corpus, tmp_path):
+    """Rows whose tokens cannot round-trip (an element outside 0–255 or
+    a null element) are counted in the manifest and still parsed."""
+    line = list(b"May 19 22:03:29 h p: x")
+    lossy = _token_rows(spark, [
+        ("lossy-300", line[:10] + [300] + line[10:]),
+        ("lossy-321", line + [321]),
+        ("lossy-null", line[:5] + [None] + line[5:]),
+    ])
+    out = str(tmp_path / "lossy")
+    m = run_pipeline(spark, corpus.unionByName(lossy), out, OPTS,
+                     n_buckets=1)["buckets"]["0"]
+    assert m["roundtrip_violations"] == 3
+    assert m["rows_in"] == N + 3
+
+
+def test_invalid_utf8_fails_the_run(spark, corpus, tmp_path):
+    """Tokens that are not valid UTF-8 break the input contract: the run
+    raises and commits no bucket."""
+    bad = _token_rows(spark, [("bad-ff", list(b"May 19 22:03:29 h p: ") + [0xFF])])
+    out = str(tmp_path / "bad")
+    with pytest.raises(Exception, match="UnicodeDecodeError"):
+        run_pipeline(spark, corpus.unionByName(bad), out, OPTS, n_buckets=1)
+    assert not any(b.get("status") == "done"
+                   for b in load_manifest(out)["buckets"].values())
+
+
 def test_iceberg_probe_and_parquet_fallback(spark, tmp_path):
     """No iceberg runtime jar ships in this sandbox: the probe must say
     so (cached per JVM) and the sink writer must fall back to

@@ -126,7 +126,6 @@ def test_fast_path_equivalence_property(lines):
 
     from pysyslog.parser import (
         FIELD_NAMES,
-        _INT_FIELDS,
         _fast_regex,
         _parse_batch,
         _slow_frame,
@@ -135,11 +134,6 @@ def test_fast_path_equivalence_property(lines):
 
     import pysyslog.parser as parser_mod
 
-    plain = [
-        f for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
     option_sets = [
         ParserOptions(now_epoch=1543622400.0, auto_detect_json=True,
                       auto_detect_key_values=True),
@@ -160,11 +154,11 @@ def test_fast_path_equivalence_property(lines):
         orig = parser_mod._FAST_MIN_FRAC
         parser_mod._FAST_MIN_FRAC = 0.0  # always engage the fast path
         try:
-            got = _parse_batch(SP(opts), raw, opts, FIELD_NAMES, plain,
-                               False, _fast_regex(opts))
+            got = _parse_batch(SP(opts), raw, opts, False,
+                               _fast_regex(opts))
         finally:
             parser_mod._FAST_MIN_FRAC = orig
-        want = _slow_frame(SP(opts), raw, FIELD_NAMES, plain, False)
+        want = _slow_frame(SP(opts), raw, False)
 
         for f in FIELD_NAMES:
             g = [_n(v) for v in got[f].tolist()]
@@ -248,7 +242,6 @@ def test_fast_path_equals_slow_property(frags, opt_i):
     import pysyslog.parser as parser_mod
     from pysyslog.parser import (
         FIELD_NAMES,
-        _INT_FIELDS,
         _fast_regex,
         _parse_batch,
         _slow_frame,
@@ -258,20 +251,14 @@ def test_fast_path_equals_slow_property(frags, opt_i):
     lines = [pri + dt + " " + host + relay + cisco + prog + content
              for pri, dt, host, relay, cisco, prog, content in frags]
     raw = pd.Series(lines, dtype=object)
-    plain = [
-        f for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
     fast_re = _fast_regex(opts)
     old_frac = parser_mod._FAST_MIN_FRAC
     parser_mod._FAST_MIN_FRAC = 0.0
     try:
-        got = _parse_batch(SyslogParser(opts), raw, opts, FIELD_NAMES,
-                           plain, False, fast_re)
+        got = _parse_batch(SyslogParser(opts), raw, opts, False, fast_re)
     finally:
         parser_mod._FAST_MIN_FRAC = old_frac
-    want = _slow_frame(SyslogParser(opts), raw, FIELD_NAMES, plain, False)
+    want = _slow_frame(SyslogParser(opts), raw, False)
 
     def _n(v):
         if v is None or (isinstance(v, float) and v != v):
